@@ -669,16 +669,19 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     def table_html_recovery(spark, sf):
         from davar_lab_ocr_spark.corpus import make_raw_corpus, raw_df
-        from davar_lab_ocr_spark.operators.table import lgpma_stage
+        from davar_lab_ocr_spark.operators.table import table_html_udf
 
         raw_rows, _ = make_raw_corpus(80, seed=13, giant_every=0)
         raw = raw_df(spark, raw_rows)
         tables = (
             raw.select("doc_id", F.posexplode("regions").alias("pos", "r"))
             .filter(F.col("r.mode") == "table")
-            .select("doc_id", "pos", "r.cell_bboxes", "r.cell_texts")
         )
-        return lgpma_stage(tables).select("doc_id", "pos", "html")
+        return tables.select(
+            "doc_id",
+            "pos",
+            table_html_udf()("r.cell_bboxes", "r.cell_texts").alias("html"),
+        )
 
     q["table_html_recovery"] = table_html_recovery
 
@@ -1283,21 +1286,22 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     def split_layout_extract(spark, sf):
         # the 100TB storage-layout path: ingest to parallel top-level
-        # arrays (pruned scans per branch), extract, same spans out —
+        # arrays, zip them back through extract(), same spans out —
         # oracle is the SAME independent fixture as resumable_extract
         # (identical corpus params), proving layout-invariance
         import tempfile
 
         from davar_lab_ocr_spark.corpus import make_raw_corpus, raw_df
+        from davar_lab_ocr_spark.plans.extract import extract
         from davar_lab_ocr_spark.plans.split_storage import (
-            extract_split,
+            from_split_layout,
             to_split_layout,
         )
 
         raw_rows, _ = make_raw_corpus(60, seed=19, giant_every=0)
         path = tempfile.mkdtemp(prefix="split_q_")
         to_split_layout(raw_df(spark, raw_rows)).write.mode("overwrite").parquet(path)
-        return _explode_spans(extract_split(spark.read.parquet(path)))
+        return _explode_spans(extract(from_split_layout(spark.read.parquet(path))))
 
     q["split_layout_extract"] = split_layout_extract
 

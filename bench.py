@@ -2,7 +2,7 @@
 
 Measures:
 1. flagship end-to-end span extraction (parquet scan -> explode ->
-   Arrow decode -> salted two-phase agg -> ordered spans -> parquet
+   Arrow decode -> collect_list re-assembly -> ordered spans -> parquet
    sink) on a deterministic synthetic interleaved corpus, at full
    parallelism AND at quarter parallelism — the N vs 4N scaling
    evidence required by BASELINE.json (no real cluster in sandbox);

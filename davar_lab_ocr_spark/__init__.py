@@ -10,14 +10,15 @@ re-expressed Spark-first:
   -> reading order -> serialize) is a DataFrame stage; per-document
   kernels run as pandas/Arrow batch UDFs, never per-row Python;
 - corpus metrics are plain DataFrame aggregations;
-- skew (giant documents) is handled with explicit salting + two-phase
-  aggregation; sinks are snapshot-committed and resumable.
+- giant documents re-assemble in one collect_list shuffle (salting
+  cannot shrink a whole-document merge); sinks are snapshot-committed
+  and resumable.
 
 Subpackages:
   functions/   scalar + numpy kernels (geometry, text, html)
   operators/   DataFrame stage builders (detection, recognition, table,
                layout, ordering, dedup, similarity, textstats, metrics)
-  plans/       end-to-end pipelines, registry, checkpoint/resume
+  plans/       end-to-end pipelines, split storage layout, checkpoint/resume
   sources/     datalist ingestion (davar JSON datalists -> documents table)
   streaming/   structured-streaming variants (video track merge)
 """

@@ -11,7 +11,7 @@ Properties:
   corpus is reproducible at any scale and independent of generation
   order / partitioning;
 - skewed: most docs have 1-23 regions, every ``giant_every``-th doc has
-  ``giant_size``+ regions (exercises salting / two-phase aggregation);
+  ``giant_size``+ regions (exercises whole-document re-assembly);
 - interleaved: text (ctc/attn decode), media (figure regions carrying
   media_ref), and table regions (LGPMA-style structure recovery to
   html) mixed within one document;

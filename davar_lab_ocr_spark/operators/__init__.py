@@ -4,5 +4,3 @@ Every operator is either pure pyspark.sql expressions (JVM-side,
 whole-stage-codegen'd) or an Arrow-batched pandas UDF / mapInPandas /
 applyInPandas stage. No per-row Python UDFs anywhere.
 """
-
-from .registry import STAGES, register_stage  # noqa: F401

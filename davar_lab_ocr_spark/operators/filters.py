@@ -1,32 +1,13 @@
-"""Projection / filter operators (pure pyspark.sql expressions).
+"""Projection / filter helpers (pure pyspark.sql expressions).
 
-Reference semantics: davar_custom.py:182-207 (_filter_imgs),
-davar_loading.py:242 (_load_cares), davar_custom.py:315-319
-(poly->rect), davar_loading.py:763-830 (text filters).
+Reference semantics: davar_custom.py:315-319 (poly->rect) and the
+charset check of the text filters (davar_loading.py:763-830), which
+sources/datalist.rcg_filter applies.
 """
 
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame
-
-
-def filter_docs(df: DataFrame, min_size: int = 32) -> DataFrame:
-    """Drop gif docs, docs below min side, docs without cared regions."""
-    cared = F.size(F.filter("regions", lambda r: r["care"] == 1))
-    return df.filter(
-        (~F.col("doc_id").endswith(".gif"))
-        & (F.least("width", "height") >= min_size)
-        & (cared > 0)
-    )
-
-
-def care_split(df: DataFrame, regions_col: str = "regions") -> DataFrame:
-    """Split the region array into cared / ignored sub-arrays
-    (higher-order filter; no explode, no shuffle)."""
-    return df.withColumn(
-        "regions_care", F.filter(regions_col, lambda r: r["care"] == 1)
-    ).withColumn("regions_ignore", F.filter(regions_col, lambda r: r["care"] != 1))
 
 
 def poly_to_rect_cols(poly_col) -> list:
@@ -40,25 +21,6 @@ def poly_to_rect_cols(poly_col) -> list:
         F.array_max(xs).alias("x1"),
         F.array_max(ys).alias("y1"),
     ]
-
-
-def filter_texts(
-    df: DataFrame,
-    text_col: str = "text",
-    max_len: int | None = None,
-    charset: str | None = None,
-    lowercase: bool = False,
-) -> DataFrame:
-    """Recognition-datalist text filters: length cap, unsupported-char
-    drop, case fold (davar_rcg_dataset.py:301-489 flavors)."""
-    out = df
-    if lowercase:
-        out = out.withColumn(text_col, F.lower(F.col(text_col)))
-    if max_len is not None:
-        out = out.filter(F.length(text_col) <= max_len)
-    if charset is not None:
-        out = out.filter(~F.col(text_col).rlike(_charset_class(charset)))
-    return out
 
 
 def _charset_class(charset: str) -> str:

@@ -11,11 +11,11 @@ detector's 2-class output (head/body); our synthetic corpus has no
 detector classes, so row-0 = header is the documented stand-in.
 
 Exposed as:
-- ``recover_table_html``: per-table pure function (numpy; runs inside
-  the decode batch UDF);
+- ``recover_table_html``: per-table pure function (numpy);
 - ``ocr_result_matching``: OCR line -> cell assignment with the exact
   max-IoU >= 0.75 / y-sort / '%'-'-' merge rule (post_lgpma.py:241-288);
-- ``lgpma_stage``: applyInPandas stage over a table-rows DataFrame.
+- ``table_html_udf``: the one Spark entry point, a column-level
+  pandas_udf over (cell_bboxes, cell_texts).
 """
 
 from __future__ import annotations
@@ -158,10 +158,9 @@ def ocr_result_matching(
 
 def table_html_udf():
     """Column-level LGPMA recovery: a pandas_udf (ArrowEvalPython)
-    mapping (cell_bboxes, cell_texts) -> html. Unlike ``lgpma_stage``
-    (mapInArrow over whole rows), ONLY the two cell columns cross the
-    Python boundary — every pass-through column stays in the JVM
-    (guide §4.1: control how many columns cross). Null/empty bboxes
+    mapping (cell_bboxes, cell_texts) -> html. ONLY the two cell
+    columns cross the Python boundary — every pass-through column stays
+    in the JVM (guide §4.1: control how many columns cross). Null/empty bboxes
     (non-table rows with masked inputs) return '' without touching the
     kernel, so the expression is safe to evaluate over a mixed
     region stream behind a when()/otherwise dispatch."""
@@ -179,33 +178,3 @@ def table_html_udf():
         )
 
     return fn
-
-
-def lgpma_stage(df, bboxes_col="cell_bboxes", texts_col="cell_texts", out_col="html", keep_cols=None):
-    """mapInArrow stage: rows (..., cell_bboxes, cell_texts) ->
-    keep_cols + out_col(html). Tables are small (<=10^3 cells); one
-    Arrow batch carries many tables. mapInArrow (not mapInPandas):
-    ragged list<list<double>> columns convert to python via
-    ListArray.to_pylist (C path) instead of pandas object Series —
-    measured ~3x less conversion overhead on table-heavy batches, and
-    the heavy cell arrays are dropped from the output batch."""
-    import pyarrow as pa
-    from pyspark.sql import types as T
-
-    keep = keep_cols or [f.name for f in df.schema.fields if f.name not in (bboxes_col, texts_col)]
-    out_schema = T.StructType(
-        [df.schema[c] for c in keep] + [T.StructField(out_col, T.StringType())]
-    )
-
-    def run(batches):
-        for batch in batches:
-            bboxes = batch.column(bboxes_col).to_pylist()
-            texts = batch.column(texts_col).to_pylist()
-            htmls = [
-                recover_table_html(bb or [], tt or [])
-                for bb, tt in zip(bboxes, texts)
-            ]
-            arrays = [batch.column(c) for c in keep] + [pa.array(htmls, type=pa.string())]
-            yield pa.RecordBatch.from_arrays(arrays, names=keep + [out_col])
-
-    return df.mapInArrow(run, schema=out_schema)

@@ -9,34 +9,29 @@ single_gpu_test -> post_processing -> evaluate):
   1. corpus filter        — SQL predicates (davar_custom._filter_imgs
                             semantics: drop .gif ids, min side >= 32,
                             at least one cared region)
-  2. explode + care mask  — posexplode_outer of the region array,
-                            filter(care=1); salt = pmod(pos, S) for
-                            two-phase skew-safe re-aggregation
+  2. explode + care mask  — explode of the region array, filter(care=1)
   3. layout classify      — kind = KINDS[argmax(kind_scores)], pure
                             JVM exprs (array_position/array_max), the
                             VSR-decode analog (vsr.py:420-437)
   4. decode               — CTC / attention decode as JVM higher-order
                             array exprs (decode_sql.py, stays in
-                            whole-stage codegen); table regions only
-                            route through an Arrow batch UDF (LGPMA
-                            chain), then unionByName
+                            whole-stage codegen); table regions get
+                            their html from a column-level Arrow UDF
+                            (LGPMA chain) behind a when() mask
   5. re-assembly          — groupBy(doc_id).collect_list(span): ONE
-                            shuffle (default). Skew analysis: for a
-                            collect_list re-assembly the final merge
-                            task must hold a whole document's spans
-                            regardless, so salted two-phase agg cannot
-                            reduce per-reducer volume — it only doubles
-                            shuffle bytes (measured ~1.5x slower).
+                            shuffle. Skew analysis: for a collect_list
+                            re-assembly the final merge task must hold
+                            a whole document's spans regardless, so a
+                            salted two-phase agg cannot reduce
+                            per-reducer volume — it only doubles
+                            shuffle bytes (measured ~1.5x slower; on an
+                            all-giant corpus, no measurable gain).
                             Salting pays off for REDUCIBLE aggregates
                             (sums/counts/sketches — see the map-side
                             partial aggs in dedup/metrics). Reducer
                             hot-spotting from many docs hashing to one
                             partition is handled by AQE partition
-                            splitting. The salted two-phase path is
-                            kept behind salt_buckets>1 for corpora with
-                            pathological per-doc span counts where the
-                            partial arrays relieve executor memory
-                            pressure during the map phase.
+                            splitting.
   6. order + offsets      — array_sort by (y0, x0) — the xy-cut
                             reading-order serialization (lexsort
                             analog, post_lgpma.py:394) — then
@@ -54,17 +49,6 @@ from pyspark.sql import DataFrame
 from ..corpus import KINDS
 
 
-DEFAULT_SALT_BUCKETS = 1  # single-shuffle re-assembly; >1 enables two-phase
-
-
-def filter_documents(raw: DataFrame) -> DataFrame:
-    """Corpus-level filter — the single implementation lives in
-    operators/filters.filter_docs (davar_custom.py:182-207 semantics)."""
-    from ..operators.filters import filter_docs
-
-    return filter_docs(raw)
-
-
 def classify_kind(col_scores) -> F.Column:
     """argmax over the score array -> kind string, all JVM-side."""
     kinds = F.array(*[F.lit(k) for k in KINDS])
@@ -72,7 +56,7 @@ def classify_kind(col_scores) -> F.Column:
     return F.element_at(kinds, idx)
 
 
-def extract(raw: DataFrame, salt_buckets: int = DEFAULT_SALT_BUCKETS) -> DataFrame:
+def extract(raw: DataFrame) -> DataFrame:
     """Run the full extraction pipeline.
 
     Text/media regions decode entirely JVM-side (higher-order array
@@ -94,29 +78,21 @@ def extract(raw: DataFrame, salt_buckets: int = DEFAULT_SALT_BUCKETS) -> DataFra
     # pass-through column of every table row (guide §4.1). Measured on
     # the 240k-doc bench corpus: 3.78 s -> 3.0 s quiet-window minima.
     #
-    # scalar corpus predicates only (gif / min side): the full
-    # filter_documents also counts cared regions via a lambda over the
-    # struct array, which kills nested pruning — and is redundant here
-    # because the per-region care filter below already removes every
-    # row of such documents.
+    # scalar corpus predicates only (gif / min side): _filter_imgs also
+    # drops documents without cared regions, but counting them with a
+    # lambda over the struct array kills nested pruning — and is
+    # redundant here because the per-region care filter below already
+    # removes every row of such documents.
     scalar_filtered = raw.filter(
         (~F.col("doc_id").endswith(".gif")) & (F.least("width", "height") >= 32)
     )
-    if salt_buckets > 1:
-        base = scalar_filtered.select(
-            "doc_id", F.posexplode("regions").alias("pos", "r")
-        )
-        salt = F.pmod(F.col("pos"), F.lit(salt_buckets)).cast("int").alias("salt")
-    else:
-        base = scalar_filtered.select("doc_id", F.explode("regions").alias("r"))
-        salt = F.lit(0).alias("salt")
+    base = scalar_filtered.select("doc_id", F.explode("regions").alias("r"))
 
     is_table = F.col("r.mode") == "table"
     html_udf = table_html_udf()
     decoded = (
         base.select(
             "doc_id",
-            salt,
             F.col("r.bbox")[1].alias("y0"),
             F.col("r.bbox")[0].alias("x0"),
             classify_kind(F.col("r.kind_scores")).alias("kind"),
@@ -137,24 +113,9 @@ def extract(raw: DataFrame, salt_buckets: int = DEFAULT_SALT_BUCKETS) -> DataFra
     )
 
     keyed = decoded.select(
-        "doc_id",
-        "salt",
-        F.struct("y0", "x0", "kind", "text", "media_ref").alias("span_k"),
+        "doc_id", F.struct("y0", "x0", "kind", "text", "media_ref").alias("span_k")
     )
-
-    if salt_buckets > 1:
-        # two-phase: partial per (doc_id, salt), then merge (see module
-        # docstring for when this pays off)
-        partial = keyed.groupBy("doc_id", "salt").agg(
-            F.collect_list("span_k").alias("part")
-        )
-        merged = partial.groupBy("doc_id").agg(
-            F.flatten(F.collect_list("part")).alias("spans_unsorted")
-        )
-    else:
-        merged = keyed.groupBy("doc_id").agg(
-            F.collect_list("span_k").alias("spans_unsorted")
-        )
+    merged = keyed.groupBy("doc_id").agg(F.collect_list("span_k").alias("spans_unsorted"))
 
     # xy-cut reading order: array_sort over struct(y0, x0, ...) sorts
     # lexicographically by field order; offsets attached positionally

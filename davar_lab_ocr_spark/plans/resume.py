@@ -158,7 +158,6 @@ def run_resumable_extract(
     raw: DataFrame,
     out_path: str,
     batch_id: str | None = None,
-    **extract_kwargs,
 ) -> dict:
     """One resumable increment: skip already-committed doc_ids, extract
     the remainder, snapshot-commit. Safe to re-run after any crash —
@@ -168,5 +167,5 @@ def run_resumable_extract(
     # no broadcast hint: at 10^12 docs the processed set is huge — let
     # Catalyst/AQE choose (it broadcasts small sides automatically)
     todo = raw if processed is None else raw.join(processed, "doc_id", "left_anti")
-    docs = extract(todo, **extract_kwargs)
+    docs = extract(todo)
     return sink.write_batch(docs, batch_id)

@@ -29,13 +29,21 @@ def test_extract_matches_oracle(spark):
 
 def test_extract_partitioning_invariant(spark):
     """Output must be identical regardless of input partitioning AND
-    aggregation strategy (determinism-under-parallelism invariant,
-    SURVEY.md §7; single-shuffle vs salted two-phase)."""
+    Arrow batch size (determinism-under-parallelism invariant,
+    SURVEY.md §7)."""
     raw_rows, expected_rows = make_raw_corpus(40, seed=11, giant_every=13, giant_size=150)
     base = raw_df(spark, raw_rows)
     a = _collect_spans(extract(base.repartition(1)))
     b = _collect_spans(extract(base.repartition(16)))
-    c = _collect_spans(extract(base.repartition(16), salt_buckets=8))
+    # the corpus has ~900 regions: one partition at 100 rows per batch
+    # splits the table UDF's input into ~10 Arrow batches instead of one
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    default = spark.conf.get(key)
+    spark.conf.set(key, "100")
+    try:
+        c = _collect_spans(extract(base.repartition(1)))
+    finally:
+        spark.conf.set(key, default)
     assert a == b
     assert a == c
     want = _collect_spans(expected_df(spark, expected_rows))

@@ -5,6 +5,7 @@ here even though small-scale results stay correct."""
 
 import contextlib
 import io
+import re
 
 import pyspark.sql.functions as F
 
@@ -84,18 +85,30 @@ def test_minhash_band_cap_uses_partitioned_window(spark):
     assert "BroadcastHashJoin" not in p
 
 
-def test_extract_has_single_shuffle(spark):
+def test_extract_has_single_shuffle(spark, tmp_path):
+    """Both storage layouts run the same extract() plan: one scan, one
+    column-level Arrow UDF, one hash exchange (the doc_id re-assembly),
+    no branch union and no whole-row mapInArrow."""
     from davar_lab_ocr_spark.corpus import make_raw_corpus, raw_df
     from davar_lab_ocr_spark.plans.extract import extract
-
-    import re
+    from davar_lab_ocr_spark.plans.split_storage import from_split_layout, to_split_layout
 
     raw_rows, _ = make_raw_corpus(10, seed=9, giant_every=0)
-    p = _plan(extract(raw_df(spark, raw_rows)))
-    # one hash exchange (the doc_id re-assembly); no sort-merge joins
-    assert len(re.findall(r"\(\d+\) Exchange", p)) == 1
-    assert "hashpartitioning(doc_id" in p
-    assert "SortMergeJoin" not in p
+    raw = raw_df(spark, raw_rows)
+    raw.write.parquet(str(tmp_path / "nested"))
+    to_split_layout(raw).write.parquet(str(tmp_path / "split"))
+    layouts = {
+        "nested": extract(spark.read.parquet(str(tmp_path / "nested"))),
+        "split": extract(from_split_layout(spark.read.parquet(str(tmp_path / "split")))),
+    }
+    for layout, df in layouts.items():
+        p = _plan(df)
+        assert len(re.findall(r"\(\d+\) Scan parquet", p)) == 1, layout
+        assert len(re.findall(r"\(\d+\) ArrowEvalPython", p)) == 1, layout
+        assert len(re.findall(r"\(\d+\) Exchange", p)) == 1, layout
+        assert "hashpartitioning(doc_id" in p, layout
+        for marker in ("Union", "MapInArrow", "SortMergeJoin"):
+            assert marker not in p, (layout, marker)
 
 
 def test_brute_force_topk_broadcasts_queries(spark):

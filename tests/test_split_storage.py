@@ -1,10 +1,9 @@
-"""Split storage layout: output parity with the flagship + scans that
-actually prune (the SCALE.md recommendation, executed)."""
-
-import re
+"""Split storage layout: output parity with the flagship when the
+parallel arrays are zipped back through extract()."""
 
 from davar_lab_ocr_spark.corpus import expected_df, make_raw_corpus, raw_df
-from davar_lab_ocr_spark.plans.split_storage import extract_split, to_split_layout
+from davar_lab_ocr_spark.plans.extract import extract
+from davar_lab_ocr_spark.plans.split_storage import from_split_layout, to_split_layout
 
 
 def _spans(df):
@@ -18,27 +17,6 @@ def test_split_extract_matches_oracle(spark, tmp_path):
     raw_rows, expected_rows = make_raw_corpus(60, seed=101, giant_every=17, giant_size=120)
     path = str(tmp_path / "split")
     to_split_layout(raw_df(spark, raw_rows)).write.mode("overwrite").parquet(path)
-    got = _spans(extract_split(spark.read.parquet(path)))
+    got = _spans(extract(from_split_layout(spark.read.parquet(path))))
     want = _spans(expected_df(spark, expected_rows))
     assert got == want
-
-
-def test_split_layout_scans_prune(spark, tmp_path):
-    spark.conf.set("spark.sql.maxMetadataStringLength", "3000")
-    raw_rows, _ = make_raw_corpus(20, seed=103, giant_every=0)
-    path = str(tmp_path / "split2")
-    to_split_layout(raw_df(spark, raw_rows)).write.mode("overwrite").parquet(path)
-    plan = (
-        extract_split(spark.read.parquet(path))
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    schemas = [m.group(1) for m in re.finditer(r"ReadSchema: (\S+)", plan)]
-    assert len(schemas) == 2
-    text_scan = [s for s in schemas if "pred_ids" in s]
-    table_scan = [s for s in schemas if "cell_bboxes" in s]
-    assert len(text_scan) == 1 and len(table_scan) == 1
-    # THE point: each branch's scan skips the other branch's payload
-    assert "cell_bboxes" not in text_scan[0] and "cell_texts" not in text_scan[0]
-    assert "pred_ids" not in table_scan[0]

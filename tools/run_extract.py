@@ -34,7 +34,6 @@ def main() -> None:
     ap.add_argument("--synthetic", type=int, default=0, help="generate N synthetic docs instead")
     ap.add_argument("--output", required=True, help="snapshot sink path")
     ap.add_argument("--batch-id", default=None)
-    ap.add_argument("--salt-buckets", type=int, default=1)
     args = ap.parse_args()
 
     from pyspark.sql import SparkSession
@@ -51,9 +50,7 @@ def main() -> None:
     else:
         sys.exit("one of --input / --synthetic is required")
 
-    manifest = run_resumable_extract(
-        spark, raw, args.output, batch_id=args.batch_id, salt_buckets=args.salt_buckets
-    )
+    manifest = run_resumable_extract(spark, raw, args.output, batch_id=args.batch_id)
     print(json.dumps(manifest))
     spark.stop()
 

@@ -8,10 +8,12 @@ Usage: python tools/selfcheck.py [sf_dir] [query_name ...]
 from __future__ import annotations
 
 import hashlib
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+# the checkout this script lives in, not whatever is installed
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import duckdb  # noqa: E402
 import pandas as pd  # noqa: E402
@@ -45,7 +47,8 @@ def main():
     import __spark_entry__ as E
     from davar_lab_ocr_spark.session import get_spark
 
-    spark = get_spark("selfcheck", parallelism=8)
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count())
+    spark = get_spark("selfcheck", parallelism=cpus)
     con = duckdb.connect()
     for t in TABLES:
         con.execute(
