@@ -33,8 +33,12 @@ def _char(v) -> F.Column:
 
 def ctc_decode_col(ids_col) -> F.Column:
     """Greedy CTC decode of array<int> -> string, pure JVM exprs.
-    Keeps ids > 0 only (skips blank 0 and ragged-matrix PAD_ID -1,
-    matching ctc_decode_py / ctc_decode_batch).
+    Keeps ids > 0 only (skips blank 0 and ragged-matrix PAD_ID -1).
+    Matches ctc_decode_batch on any ids: a step is kept iff its id is
+    positive and differs from the previous RAW id, PAD included. It
+    matches ctc_decode_py only when PAD_ID is tail padding: the python
+    oracle stops at the first PAD, so an id after a PAD ([5, -1, 5])
+    is dropped there but kept here. Null input -> ''.
 
     Formulated as zip_with(ids, shift(ids)) rather than the r5
     sequence/filter over indices with three element_at probes per
@@ -60,7 +64,8 @@ def ctc_decode_col(ids_col) -> F.Column:
 def attn_decode_col(ids_col) -> F.Column:
     """Attention decode of array<int> -> string, pure JVM exprs.
     PAD_ID (-1) padding is dropped before mapping (the python oracle
-    stops at the first PAD)."""
+    stops at the first PAD, so the two agree when PAD_ID is tail
+    padding)."""
     valid = F.filter(ids_col, lambda v: v >= 0)
     mapped = F.transform(
         valid,

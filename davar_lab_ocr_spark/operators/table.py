@@ -14,14 +14,21 @@ Exposed as:
 - ``recover_table_html``: per-table pure function (numpy);
 - ``ocr_result_matching``: OCR line -> cell assignment with the exact
   max-IoU >= 0.75 / y-sort / '%'-'-' merge rule (post_lgpma.py:241-288);
-- ``table_html_udf``: the one Spark entry point, a column-level
-  pandas_udf over (cell_bboxes, cell_texts).
+- ``doc_table_html_udf``: the extract() entry point, an Arrow UDF over
+  a whole document's (regions.cell_bboxes, regions.cell_texts) that
+  returns one html per region, so one row per document crosses to
+  Python;
+- ``table_html_udf``: the same kernel over one region's
+  (cell_bboxes, cell_texts), for table-row queries.
+
+Both call ``_region_html``, the one kernel entry.
 """
 
 from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 
 from ..functions.geometry import adj_to_cell, bbox2adj, rect_max_iou_matrix
 from ..functions.html import area_to_html, format_html
@@ -156,25 +163,53 @@ def ocr_result_matching(
     return out
 
 
+def _region_html(cell_bboxes, cell_texts) -> str:
+    """One region's html: the kernel for a region with cells, '' for a
+    region without (null/empty bboxes — every non-table region)."""
+    if cell_bboxes is None or not len(cell_bboxes):
+        return ""
+    return recover_table_html(cell_bboxes, cell_texts if cell_texts is not None else [])
+
+
 def table_html_udf():
     """Column-level LGPMA recovery: a pandas_udf (ArrowEvalPython)
-    mapping (cell_bboxes, cell_texts) -> html. ONLY the two cell
-    columns cross the Python boundary — every pass-through column stays
-    in the JVM (guide §4.1: control how many columns cross). Null/empty bboxes
-    (non-table rows with masked inputs) return '' without touching the
-    kernel, so the expression is safe to evaluate over a mixed
-    region stream behind a when()/otherwise dispatch."""
+    mapping one region's (cell_bboxes, cell_texts) -> html. ONLY the
+    two cell columns cross the Python boundary — every pass-through
+    column stays in the JVM (guide §4.1: control how many columns
+    cross). Null/empty bboxes return '' without touching the kernel."""
     import pyspark.sql.functions as F
 
     @F.pandas_udf("string")
     def fn(bb: pd.Series, tt: pd.Series) -> pd.Series:
-        return pd.Series(
+        return pd.Series([_region_html(b, t) for b, t in zip(bb, tt)])
+
+    return fn
+
+
+def doc_table_html_udf():
+    """Document-level LGPMA recovery: an Arrow UDF (ArrowEvalPython)
+    mapping a document's (regions.cell_bboxes, regions.cell_texts) ->
+    one html per region, index-aligned with ``regions`` ('' for a
+    region without cells, null for a null ``regions``). Python sees one
+    row per document instead of one per region: the row count, not the
+    payload, is what the Arrow boundary costs.
+
+    pyarrow-native (``arrow_udf`` + ``to_pylist``), not pandas: pyarrow
+    16's ``to_pandas`` segfaults on a list<list<list<double>>> batch
+    whose per-region level is empty (every document with ``regions``
+    null or []), which a pandas_udf converts before calling us."""
+    import pyspark.sql.functions as F
+
+    @F.arrow_udf("array<string>")
+    def fn(bb: pa.Array, tt: pa.Array) -> pa.Array:
+        # both arrays are fields of the same ``regions``: equal length,
+        # and null together
+        return pa.array(
             [
-                recover_table_html(b, t if t is not None else [])
-                if b is not None and len(b)
-                else ""
-                for b, t in zip(bb, tt)
-            ]
+                None if doc_bb is None else [_region_html(b, t) for b, t in zip(doc_bb, doc_tt)]
+                for doc_bb, doc_tt in zip(bb.to_pylist(), tt.to_pylist())
+            ],
+            pa.list_(pa.string()),
         )
 
     return fn

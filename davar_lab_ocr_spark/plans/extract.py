@@ -9,16 +9,21 @@ single_gpu_test -> post_processing -> evaluate):
   1. corpus filter        — SQL predicates (davar_custom._filter_imgs
                             semantics: drop .gif ids, min side >= 32,
                             at least one cared region)
-  2. explode + care mask  — explode of the region array, filter(care=1)
-  3. layout classify      — kind = KINDS[argmax(kind_scores)], pure
+  2. table html           — one column-level Arrow UDF per DOCUMENT over
+                            regions.cell_bboxes / regions.cell_texts
+                            (LGPMA chain), returning one html per
+                            region — before the explode, so Python
+                            sees one row per document
+  3. explode + care mask  — posexplode of the region array,
+                            filter(care=1)
+  4. layout classify      — kind = KINDS[argmax(kind_scores)], pure
                             JVM exprs (array_position/array_max), the
                             VSR-decode analog (vsr.py:420-437)
-  4. decode               — CTC / attention decode as JVM higher-order
+  5. decode               — CTC / attention decode as JVM higher-order
                             array exprs (decode_sql.py, stays in
-                            whole-stage codegen); table regions get
-                            their html from a column-level Arrow UDF
-                            (LGPMA chain) behind a when() mask
-  5. re-assembly          — groupBy(doc_id).collect_list(span): ONE
+                            whole-stage codegen); table regions take
+                            element pos of the stage-2 html array
+  6. re-assembly          — groupBy(doc_id).collect_list(span): ONE
                             shuffle. Skew analysis: for a collect_list
                             re-assembly the final merge task must hold
                             a whole document's spans regardless, so a
@@ -32,13 +37,13 @@ single_gpu_test -> post_processing -> evaluate):
                             hot-spotting from many docs hashing to one
                             partition is handled by AQE partition
                             splitting.
-  6. order + offsets      — array_sort by (y0, x0) — the xy-cut
+  7. order + offsets      — array_sort by (y0, x0) — the xy-cut
                             reading-order serialization (lexsort
                             analog, post_lgpma.py:394) — then
                             transform to attach dense offsets
 
 One wide operation after the scan (the groupBy); all expressions
-JVM-side except the per-table Arrow kernel.
+JVM-side except the per-document table Arrow kernel.
 """
 
 from __future__ import annotations
@@ -61,22 +66,17 @@ def extract(raw: DataFrame) -> DataFrame:
 
     Text/media regions decode entirely JVM-side (higher-order array
     exprs, operators/decode_sql.py) — the hot path never leaves
-    whole-stage codegen. Only table regions (rare, genuinely numpy:
-    clique solving + html assembly) route through the Arrow batch UDF.
+    whole-stage codegen. Only the cell arrays (tables are rare and
+    genuinely numpy: clique solving + html assembly) route through the
+    Arrow batch UDF, one row per document.
     """
     from ..operators.decode_sql import text_decode_col
-    from ..operators.table import table_html_udf
+    from ..operators.table import doc_table_html_udf
 
     # ONE scan, ONE explode (r6; the r5 two-branch unionByName scanned
     # the corpus twice — once per branch — re-reading the shared region
     # fields and re-running the explode, because each branch's
     # nested-pruned scan is a separate subtree Catalyst cannot merge).
-    # Table html now comes from a COLUMN-level pandas_udf dispatched
-    # behind when(mode == 'table'): only the when()-masked cell arrays
-    # (null for the ~89% non-table regions) and the html string cross
-    # the Python boundary, instead of mapInArrow round-tripping every
-    # pass-through column of every table row (guide §4.1). Measured on
-    # the 240k-doc bench corpus: 3.78 s -> 3.0 s quiet-window minima.
     #
     # scalar corpus predicates only (gif / min side): _filter_imgs also
     # drops documents without cared regions, but counting them with a
@@ -86,10 +86,23 @@ def extract(raw: DataFrame) -> DataFrame:
     scalar_filtered = raw.filter(
         (~F.col("doc_id").endswith(".gif")) & (F.least("width", "height") >= 32)
     )
-    base = scalar_filtered.select("doc_id", F.explode("regions").alias("r"))
+    # Table html is computed BEFORE the explode, one Python row per
+    # document: an Arrow UDF over the document's cell arrays
+    # (GetArrayStructFields, no lambda) returns one html per region,
+    # which the table branch below picks by position. Row count is what
+    # the Arrow boundary costs: a when()-masked per-region UDF after the
+    # explode still ships every cared region (51,575 rows for 397
+    # tables per extract_resume pass, against 374 documents). No mask
+    # is needed here: non-table regions already carry null cells.
+    with_html = scalar_filtered.select(
+        "doc_id",
+        "regions",
+        doc_table_html_udf()(
+            F.col("regions")["cell_bboxes"], F.col("regions")["cell_texts"]
+        ).alias("htmls"),
+    )
+    base = with_html.select("doc_id", "htmls", F.posexplode("regions").alias("pos", "r"))
 
-    is_table = F.col("r.mode") == "table"
-    html_udf = table_html_udf()
     decoded = (
         base.select(
             "doc_id",
@@ -98,13 +111,7 @@ def extract(raw: DataFrame) -> DataFrame:
             classify_kind(F.col("r.kind_scores")).alias("kind"),
             F.col("r.media_ref").alias("media_ref"),
             F.col("r.care").alias("care"),
-            F.when(
-                is_table,
-                html_udf(
-                    F.when(is_table, F.col("r.cell_bboxes")),
-                    F.when(is_table, F.col("r.cell_texts")),
-                ),
-            )
+            F.when(F.col("r.mode") == "table", F.element_at("htmls", F.col("pos") + 1))
             .otherwise(text_decode_col(F.col("r.mode"), F.col("r.pred_ids")))
             .alias("text"),
         )

@@ -28,26 +28,43 @@ def test_extract_matches_oracle(spark):
 
 
 def test_extract_partitioning_invariant(spark):
-    """Output must be identical regardless of input partitioning AND
-    Arrow batch size (determinism-under-parallelism invariant,
-    SURVEY.md §7)."""
+    """Output must be identical regardless of input partitioning, Arrow
+    batch size AND adaptive execution (determinism-under-parallelism
+    invariant, SURVEY.md §7)."""
     raw_rows, expected_rows = make_raw_corpus(40, seed=11, giant_every=13, giant_size=150)
     base = raw_df(spark, raw_rows)
     a = _collect_spans(extract(base.repartition(1)))
     b = _collect_spans(extract(base.repartition(16)))
-    # the corpus has ~900 regions: one partition at 100 rows per batch
-    # splits the table UDF's input into ~10 Arrow batches instead of one
+    # 40 documents in one partition at 4 rows per batch: the table
+    # UDF's input (one row per document) splits into 10 Arrow batches
+    # instead of one
     key = "spark.sql.execution.arrow.maxRecordsPerBatch"
     default = spark.conf.get(key)
-    spark.conf.set(key, "100")
+    spark.conf.set(key, "4")
     try:
         c = _collect_spans(extract(base.repartition(1)))
     finally:
         spark.conf.set(key, default)
+    aqe = "spark.sql.adaptive.enabled"
+    aqe_default = spark.conf.get(aqe)
+    spark.conf.set(aqe, "false")
+    try:
+        d = _collect_spans(extract(base.repartition(16)))
+    finally:
+        spark.conf.set(aqe, aqe_default)
     assert a == b
     assert a == c
+    assert a == d
     want = _collect_spans(expected_df(spark, expected_rows))
     assert a == want
+
+
+def test_extract_all_giant_table_free(spark):
+    """Every document giant and table-free at 16 partitions: every Arrow
+    batch the table UDF sees carries only null cell arrays."""
+    raw_rows, expected_rows = make_raw_corpus(16, seed=17, giant_every=1, giant_size=120)
+    got = _collect_spans(extract(raw_df(spark, raw_rows).repartition(16)))
+    assert got == _collect_spans(expected_df(spark, expected_rows))
 
 
 def test_extract_drops_dontcare_and_small_docs(spark):

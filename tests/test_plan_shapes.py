@@ -88,7 +88,9 @@ def test_minhash_band_cap_uses_partitioned_window(spark):
 def test_extract_has_single_shuffle(spark, tmp_path):
     """Both storage layouts run the same extract() plan: one scan, one
     column-level Arrow UDF, one hash exchange (the doc_id re-assembly),
-    no branch union and no whole-row mapInArrow."""
+    no branch union and no whole-row mapInArrow. The UDF runs per
+    document: its node comes before the explode (a lower number in the
+    formatted plan, which numbers from the scan up)."""
     from davar_lab_ocr_spark.corpus import make_raw_corpus, raw_df
     from davar_lab_ocr_spark.plans.extract import extract
     from davar_lab_ocr_spark.plans.split_storage import from_split_layout, to_split_layout
@@ -107,6 +109,9 @@ def test_extract_has_single_shuffle(spark, tmp_path):
         assert len(re.findall(r"\(\d+\) ArrowEvalPython", p)) == 1, layout
         assert len(re.findall(r"\(\d+\) Exchange", p)) == 1, layout
         assert "hashpartitioning(doc_id" in p, layout
+        udf_node = int(re.search(r"\((\d+)\) ArrowEvalPython", p).group(1))
+        generate_node = int(re.search(r"\((\d+)\) Generate", p).group(1))
+        assert udf_node < generate_node, layout
         for marker in ("Union", "MapInArrow", "SortMergeJoin"):
             assert marker not in p, (layout, marker)
 

@@ -201,3 +201,86 @@ def test_fast_path_rejects_nongrid():
     # overlapping y intervals -> must fall back
     assert _derive_cells_fast([[0, 0, 10, 20], [0, 15, 10, 40]]) is None
     assert _derive_cells_fast([]) is None
+
+
+def _hyp_region(kind: str, care: int, seed: int) -> dict:
+    from davar_lab_ocr_spark.corpus import _make_table
+
+    region = {
+        "bbox": [0.0, float(seed % 500), 10.0, 10.0],
+        "kind_scores": [0.1, 0.1, 0.1, 0.1, 0.1],
+        "pred_ids": [],
+        "mode": kind,
+        "care": care,
+        "media_ref": "",
+        "cell_bboxes": None,
+        "cell_texts": None,
+    }
+    if kind == "table":
+        bb, tt, _html = _make_table(np.random.default_rng(seed))
+        region["cell_bboxes"], region["cell_texts"] = bb, tt
+    elif kind == "empty_table":
+        region["mode"], region["cell_bboxes"], region["cell_texts"] = "table", [], []
+    elif kind == "media":
+        region["media_ref"] = f"media://{seed}.png"
+    else:
+        region["pred_ids"] = [int(v) for v in np.random.default_rng(seed).integers(0, 37, 8)]
+    return region
+
+
+def test_doc_table_html_udf_matches_per_table_kernel(spark):
+    """The document-level UDF returns, region by region, exactly what
+    the per-table kernel returns: recover_table_html for a region with
+    cells, '' for one without, null for a null ``regions``. Every
+    generated corpus also carries regions=[], null regions, a
+    table-free document and a care=0 table."""
+    import pyspark.sql.functions as F
+    import pyspark.sql.types as T
+    from hypothesis import given, settings
+    from hypothesis import strategies as st
+
+    from davar_lab_ocr_spark.operators.table import doc_table_html_udf
+    from davar_lab_ocr_spark.schemas import RAW_REGION
+
+    schema = T.StructType(
+        [
+            T.StructField("doc_id", T.StringType(), False),
+            T.StructField("regions", T.ArrayType(RAW_REGION, False), True),
+        ]
+    )
+    region = st.builds(
+        _hyp_region,
+        st.sampled_from(["table", "empty_table", "ctc", "attn", "media"]),
+        st.integers(0, 1),
+        st.integers(0, 10_000),
+    )
+    fixed = [
+        [],
+        None,
+        [_hyp_region("ctc", 1, 1), _hyp_region("media", 1, 2)],
+        [_hyp_region("table", 0, 3), _hyp_region("attn", 1, 4)],
+    ]
+
+    @given(st.lists(st.none() | st.lists(region, max_size=6), max_size=6))
+    @settings(max_examples=15, deadline=None)
+    def check(docs):
+        docs = docs + fixed
+        rows = [(f"d{i}", regions) for i, regions in enumerate(docs)]
+        df = spark.createDataFrame(rows, schema).repartition(2)
+        got = {
+            r["doc_id"]: r["htmls"]
+            for r in df.select(
+                "doc_id",
+                doc_table_html_udf()(
+                    F.col("regions")["cell_bboxes"], F.col("regions")["cell_texts"]
+                ).alias("htmls"),
+            ).collect()
+        }
+        for doc_id, regions in rows:
+            want = None if regions is None else [
+                recover_table_html(r["cell_bboxes"], r["cell_texts"]) if r["cell_bboxes"] else ""
+                for r in regions
+            ]
+            assert got[doc_id] == want, doc_id
+
+    check()

@@ -124,3 +124,40 @@ def test_ace_rfl_edge_cases(spark):
     assert (out[1]["txt"], out[1]["n"]) == ("", 0)
     assert (out[2]["txt"], out[2]["n"]) == ("z", 0)
     assert out[0]["via_dispatch"] == "09"
+
+
+def test_sql_decoders_match_python_oracles(spark):
+    """ctc_decode_col / attn_decode_col (JVM) equal ctc_decode_py /
+    attn_decode_py on random tail-padded ids (ids past the charset
+    included, so the clamp is exercised), plus [], [0], [5, 0, 5] and
+    null (decoded as '')."""
+    import pyspark.sql.functions as F
+    from hypothesis import given, settings
+    from hypothesis import strategies as st
+
+    from davar_lab_ocr_spark.operators.decode_sql import attn_decode_col, ctc_decode_col
+
+    # a few ids drawn from a small set make adjacent repeats common
+    ids = st.sampled_from([0, 1, 2, 5]) | st.integers(0, 40)
+    padded = st.tuples(st.lists(ids, max_size=30), st.integers(0, 5)).map(
+        lambda t: t[0] + [PAD_ID] * t[1]
+    )
+    fixed = [[], [0], [5, 0, 5], None, [3, 3, 0, 3, 1, 1, PAD_ID, PAD_ID]]
+
+    @given(st.lists(padded, max_size=40))
+    @settings(max_examples=25, deadline=None)
+    def check(seqs):
+        seqs = seqs + fixed
+        df = spark.createDataFrame([(i, s) for i, s in enumerate(seqs)], "i int, ids array<int>")
+        got = {
+            r["i"]: (r["ctc"], r["attn"])
+            for r in df.select(
+                "i",
+                ctc_decode_col(F.col("ids")).alias("ctc"),
+                attn_decode_col(F.col("ids")).alias("attn"),
+            ).collect()
+        }
+        for i, s in enumerate(seqs):
+            assert got[i] == (ctc_decode_py(s or []), attn_decode_py(s or [])), s
+
+    check()

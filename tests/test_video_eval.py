@@ -11,6 +11,7 @@ and the vocabulary-snap function against the shipped 200-word lexicons.
 """
 
 import json
+import os
 
 import numpy as np
 import pytest
@@ -20,6 +21,7 @@ TRACK_FILE = "/root/reference/demo/videotext/evaluation/pred/IC15_pred_track_res
 VOCA_FILE = "/root/reference/demo/videotext/evaluation/gt/IC15/IC15_voca.json"
 
 
+@pytest.mark.skipif(not os.path.exists(PRED_FILE), reason="reference checkout absent")
 def test_track_results_scan_shipped_file(spark):
     from davar_lab_ocr_spark.sources.datalist import read_track_results
 
@@ -45,6 +47,7 @@ def test_track_results_scan_shipped_file(spark):
     assert tdf.count() == 798
 
 
+@pytest.mark.skipif(not os.path.exists(PRED_FILE), reason="reference checkout absent")
 def test_selected_frame_rule_on_shipped_tracks():
     """select_best_frame == the reference's load_pre_fscore rule
     (first strict max of the quality scores), checked independently
@@ -71,6 +74,7 @@ def test_selected_frame_rule_on_shipped_tracks():
     assert n == 798
 
 
+@pytest.mark.skipif(not os.path.exists(VOCA_FILE), reason="reference checkout absent")
 def test_snap_gt_trans_shipped_vocab_parity():
     """snap_gt_trans vs an independent transliteration of
     process_gt_trans on the shipped IC15 vocabulary."""
@@ -191,6 +195,7 @@ def test_fscore_track_eval_quirks(spark):
     assert row["hmean"] == pytest.approx(2 * 0.5 * 0.6 / 1.1, abs=1e-6)
 
 
+@pytest.mark.skipif(not os.path.exists(PRED_FILE), reason="reference checkout absent")
 def test_fscore_on_shipped_pred_with_derived_gt(spark):
     """End-to-end on the REAL shipped prediction file: gt is derived
     from the predictions themselves (each track's selected frame box +
@@ -412,6 +417,7 @@ def test_ata_track_eval_quirks(spark):
     assert row2["ata"] == pytest.approx((1.0 + 0.0 + 1.0) / 3, abs=1e-6)
 
 
+@pytest.mark.skipif(not os.path.exists(PRED_FILE), reason="reference checkout absent")
 def test_ata_on_shipped_pred_identity_gt(spark):
     """Shipped 798-track pred vs a gt derived as an exact copy (all
     frames HIGH quality, trans = text.upper()): every optimal
@@ -500,6 +506,7 @@ def test_mot_track_eval_quirks(spark):
     assert row2["mota"] == pytest.approx(1 - 2 / 11, abs=1e-6)
 
 
+@pytest.mark.skipif(not os.path.exists(PRED_FILE), reason="reference checkout absent")
 def test_mot_on_shipped_pred_identity_gt(spark):
     """Shipped 798-track pred vs an identity-derived gt (per-frame
     last-wins dedup mirrored, instance word = final text, HIGH
