@@ -61,6 +61,16 @@ def classify_kind(col_scores) -> F.Column:
     return F.element_at(kinds, idx)
 
 
+def keep_documents() -> F.Column:
+    """The documents extract() keeps (davar_custom._filter_imgs): not a
+    .gif id, min side >= 32, and at least one cared region."""
+    return (
+        ~F.col("doc_id").endswith(".gif")
+        & (F.least("width", "height") >= 32)
+        & F.array_contains(F.col("regions")["care"], 1)
+    )
+
+
 def extract(raw: DataFrame) -> DataFrame:
     """Run the full extraction pipeline.
 
@@ -78,14 +88,12 @@ def extract(raw: DataFrame) -> DataFrame:
     # fields and re-running the explode, because each branch's
     # nested-pruned scan is a separate subtree Catalyst cannot merge).
     #
-    # scalar corpus predicates only (gif / min side): _filter_imgs also
-    # drops documents without cared regions, but counting them with a
-    # lambda over the struct array kills nested pruning — and is
-    # redundant here because the per-region care filter below already
-    # removes every row of such documents.
-    scalar_filtered = raw.filter(
-        (~F.col("doc_id").endswith(".gif")) & (F.least("width", "height") >= 32)
-    )
+    # the full _filter_imgs rule (keep_documents): the cared-region test
+    # reads regions.care through GetArrayStructFields, no lambda, so
+    # nested pruning still holds. Documents without a cared region never
+    # reach the table UDF, and resume can find pending documents with a
+    # scan of the keys and regions.care alone.
+    kept = raw.filter(keep_documents())
     # Table html is computed BEFORE the explode, one Python row per
     # document: an Arrow UDF over the document's cell arrays
     # (GetArrayStructFields, no lambda) returns one html per region,
@@ -94,7 +102,7 @@ def extract(raw: DataFrame) -> DataFrame:
     # explode still ships every cared region (51,575 rows for 397
     # tables per extract_resume pass, against 374 documents). No mask
     # is needed here: non-table regions already carry null cells.
-    with_html = scalar_filtered.select(
+    with_html = kept.select(
         "doc_id",
         "regions",
         doc_table_html_udf()(

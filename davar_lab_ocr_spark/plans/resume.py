@@ -16,8 +16,19 @@ commit protocol on plain parquet:
 
 A batch is visible iff its manifest exists — a crash mid-write leaves
 orphan files that readers never see (snapshot isolation, the
-df.write.format('iceberg') analog). Resume = left-anti join of the
-input's doc_ids against all committed batches' doc_ids.
+df.write.format('iceberg') analog).
+
+Pending = the documents extract() keeps (``keep_documents``) left-anti
+joined against all committed batches' doc_ids. A document extract()
+drops never lands in a snapshot, so it must not count as pending. That
+test reads only the keys and ``regions.care``; when nothing is pending
+the increment commits an empty batch without starting the extract plan
+(no regions scan, no Python task).
+
+Spark jobs per increment: the pending check, the extract stages, the
+data write (manifest totals are observed on it) and the lineage write.
+Committed keys are read with an explicit schema, so no schema-merge job
+runs.
 """
 
 from __future__ import annotations
@@ -28,9 +39,9 @@ import time
 import uuid
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 
-from .extract import extract
+from .extract import extract, keep_documents
 
 
 class SnapshotSink:
@@ -88,8 +99,12 @@ class SnapshotSink:
         return spark.read.option("mergeSchema", "true").parquet(*paths)
 
     def processed_doc_ids(self, spark: SparkSession) -> DataFrame | None:
-        df = self.read(spark)
-        return df.select("doc_id") if df is not None else None
+        """doc_id of every committed batch, read with an explicit schema:
+        the key column is in every batch, so no schema-merge job runs."""
+        paths = self.committed_paths()
+        if not paths:
+            return None
+        return spark.read.schema("doc_id string").parquet(*paths)
 
     # -- commit --------------------------------------------------------------
     def write_batch(self, docs: DataFrame, batch_id: str | None = None) -> dict:
@@ -112,9 +127,18 @@ class SnapshotSink:
                 )
             )
         ).alias("n_empty_spans")
+        # the manifest totals are observed on the data write itself, so
+        # no separate totals job runs. persist() stays: the lineage
+        # groupBy reads the same rows and would otherwise recompute them.
+        observed = Observation()
         staged = docs.withColumn("_part", F.spark_partition_id()).persist()
         try:
-            staged.drop("_part").write.mode("overwrite").parquet(data_path)
+            staged.drop("_part").observe(
+                observed,
+                F.count(F.lit(1)).alias("n_docs"),
+                F.sum(F.size("spans")).alias("n_spans"),
+                n_empty,
+            ).write.mode("overwrite").parquet(data_path)
             lineage = staged.groupBy("_part").agg(
                 F.count("*").alias("n_docs"),
                 F.sum(F.size("spans")).alias("n_spans"),
@@ -123,13 +147,9 @@ class SnapshotSink:
                 F.max("doc_id").alias("max_doc_id"),
             )
             lineage.write.mode("overwrite").parquet(lineage_path)
-            totals = staged.agg(
-                F.count("*").alias("n_docs"),
-                F.sum(F.size("spans")).alias("n_spans"),
-                n_empty,
-            ).collect()[0]
         finally:
             staged.unpersist()
+        totals = observed.get
 
         # monotonic commit sequence (single-writer protocol, like
         # Iceberg's snapshot sequence-number): next = max committed + 1
@@ -153,6 +173,18 @@ class SnapshotSink:
         return manifest
 
 
+def pending_documents(spark: SparkSession, raw: DataFrame, sink: SnapshotSink) -> DataFrame:
+    """The rows of ``raw`` an increment must commit: documents extract()
+    keeps whose doc_id no committed batch holds. A document extract()
+    drops never lands in a snapshot, so it is filtered out here rather
+    than counted as pending on every increment."""
+    todo = raw.filter(keep_documents())
+    processed = sink.processed_doc_ids(spark)
+    # no broadcast hint: at 10^12 docs the processed set is huge — let
+    # Catalyst/AQE choose (it broadcasts small sides automatically)
+    return todo if processed is None else todo.join(processed, "doc_id", "left_anti")
+
+
 def run_resumable_extract(
     spark: SparkSession,
     raw: DataFrame,
@@ -163,9 +195,11 @@ def run_resumable_extract(
     the remainder, snapshot-commit. Safe to re-run after any crash —
     uncommitted partial output is invisible and re-done."""
     sink = SnapshotSink(out_path)
-    processed = sink.processed_doc_ids(spark)
-    # no broadcast hint: at 10^12 docs the processed set is huge — let
-    # Catalyst/AQE choose (it broadcasts small sides automatically)
-    todo = raw if processed is None else raw.join(processed, "doc_id", "left_anti")
+    todo = pending_documents(spark, raw, sink)
     docs = extract(todo)
+    # nothing pending: commit the empty batch without starting the
+    # extract plan. limit(0) optimizes to an empty LocalRelation, so no
+    # regions scan and no Python task runs.
+    if todo.select("doc_id").isEmpty():
+        docs = docs.limit(0)
     return sink.write_batch(docs, batch_id)

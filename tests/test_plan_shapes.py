@@ -116,6 +116,35 @@ def test_extract_has_single_shuffle(spark, tmp_path):
             assert marker not in p, (layout, marker)
 
 
+def test_pending_scan_is_key_only(spark, tmp_path):
+    """Resume decides what is pending from the keys and regions.care
+    alone, and an increment with nothing pending commits extract()'s
+    limit(0), which optimizes to an empty relation: no regions scan and
+    no Python task."""
+    from davar_lab_ocr_spark.corpus import make_raw_corpus, raw_df
+    from davar_lab_ocr_spark.plans.extract import extract
+    from davar_lab_ocr_spark.plans.resume import SnapshotSink, pending_documents
+
+    raw_rows, _ = make_raw_corpus(10, seed=9, giant_every=0)
+    raw_df(spark, raw_rows).write.parquet(str(tmp_path / "raw"))
+    raw = spark.read.parquet(str(tmp_path / "raw"))
+    sink = SnapshotSink(str(tmp_path / "sink"))
+    spans = "array<struct<kind:string,text:string,media_ref:string,offset:int>>"
+    committed = spark.createDataFrame([(raw_rows[0]["doc_id"], [])], f"doc_id string, spans {spans}")
+    sink.write_batch(committed, batch_id="b1")
+
+    p = _plan(pending_documents(spark, raw, sink).select("doc_id"))
+    assert sorted(re.findall(r"ReadSchema: (\S+)", p)) == [
+        "struct<doc_id:string,width:int,height:int,regions:array<struct<care:int>>>",
+        "struct<doc_id:string>",
+    ]
+    for field in ("pred_ids", "cell_", "kind_scores"):
+        assert field not in p, field
+
+    empty = extract(raw).limit(0)._jdf.queryExecution().optimizedPlan()
+    assert empty.toString().startswith("LocalRelation <empty>")
+
+
 def test_brute_force_topk_broadcasts_queries(spark):
     from davar_lab_ocr_spark.operators.similarity import brute_force_topk
 

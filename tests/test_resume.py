@@ -2,18 +2,42 @@
 
 import json
 import os
+import uuid
 
 import pyspark.sql.functions as F
+import pyspark.sql.types as T
 
 from davar_lab_ocr_spark.corpus import expected_df, make_raw_corpus, raw_df
+from davar_lab_ocr_spark.plans.extract import extract
 from davar_lab_ocr_spark.plans.resume import SnapshotSink, run_resumable_extract
+from davar_lab_ocr_spark.schemas import RAW_DOCUMENTS
+
+
+def _spans(spans):
+    return [(s["kind"], s["text"], s["media_ref"], s["offset"]) for s in spans]
 
 
 def _spans_map(df):
-    return {
-        r["doc_id"]: [(s["kind"], s["text"], s["media_ref"], s["offset"]) for s in r["spans"]]
-        for r in df.collect()
-    }
+    return {r["doc_id"]: _spans(r["spans"]) for r in df.collect()}
+
+
+def _corpus_with_dropped_docs(spark, path, n_docs, seed):
+    """A parquet corpus of normal documents plus five extract() drops:
+    every region care=0, a .gif id, min side < 32, regions=[] and null
+    regions. Returns the input and the oracle spans of the kept docs."""
+    raw_rows, expected_rows = make_raw_corpus(n_docs, seed=seed, giant_every=0)
+    for region in raw_rows[0]["regions"]:
+        region["care"] = 0
+    raw_rows[1]["doc_id"] += ".gif"
+    raw_rows[2]["height"] = 31
+    raw_rows[3]["regions"] = []
+    raw_rows[4]["regions"] = None
+    schema = T.StructType(
+        [*RAW_DOCUMENTS.fields[:3], T.StructField("regions", RAW_DOCUMENTS["regions"].dataType, True)]
+    )
+    spark.createDataFrame(raw_rows, schema=schema).write.parquet(path)
+    want = {e["doc_id"]: _spans(e["spans"]) for e in expected_rows[5:] if e["spans"]}
+    return spark.read.parquet(path), want
 
 
 def test_resume_after_partial_commit(spark, tmp_path):
@@ -52,20 +76,50 @@ def test_rerun_is_idempotent(spark, tmp_path):
 
 
 def test_lineage_counters(spark, tmp_path):
+    """Manifest totals (observed on the data write) equal the lineage
+    sums and the committed spans, over a three-partition batch whose
+    input also holds documents extract() drops."""
     out = str(tmp_path / "sink3")
-    raw_rows, expected_rows = make_raw_corpus(30, seed=23, giant_every=0)
-    run_resumable_extract(spark, raw_df(spark, raw_rows), out, batch_id="x")
-    sink = SnapshotSink(out)
-    manifest = sink.committed_batches()[0]
-    lineage = spark.read.parquet(manifest["lineage_path"])
-    rows = lineage.collect()
-    assert sum(r["n_docs"] for r in rows) == manifest["n_docs"]
-    assert sum(r["n_spans"] for r in rows) == manifest["n_spans"]
-    total_spans = sum(len(e["spans"]) for e in expected_rows)
-    assert manifest["n_spans"] == total_spans
+    raw, want = _corpus_with_dropped_docs(spark, str(tmp_path / "raw"), 30, seed=23)
+    docs = extract(raw)
+    assert _spans_map(docs) == want
+    manifest = SnapshotSink(out).write_batch(docs.repartition(3), batch_id="x")
+    rows = spark.read.parquet(manifest["lineage_path"]).collect()
+    assert len(rows) == 3
+    for key in ("n_docs", "n_spans", "n_empty_spans"):
+        assert sum(r[key] for r in rows) == manifest[key], key
+    committed = SnapshotSink(out).read(spark)
+    assert manifest["n_docs"] == len(want)
+    assert manifest["n_spans"] == committed.select(F.sum(F.size("spans"))).first()[0]
+    assert manifest["n_spans"] == sum(len(s) for s in want.values())
+    assert manifest["n_empty_spans"] == sum(
+        1 for spans in want.values() for _k, text, media_ref, _o in spans if not text and not media_ref
+    )
     # manifest is valid json on disk
     with open(os.path.join(out, "_manifests", "x.json")) as fh:
         assert json.load(fh)["batch_id"] == "x"
+
+
+def test_rerun_skips_dropped_documents(spark, tmp_path):
+    """A document extract() drops never lands in a snapshot, yet is not
+    pending: a rerun over the committed input commits an all-zero batch
+    without running the extract plan."""
+    out = str(tmp_path / "sink5")
+    raw, want = _corpus_with_dropped_docs(spark, str(tmp_path / "raw"), 30, seed=24)
+    run_resumable_extract(spark, raw, out, batch_id="a")
+
+    sc = spark.sparkContext
+    group = f"rerun-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "rerun")
+    try:
+        m = run_resumable_extract(spark, raw, out, batch_id="b")
+    finally:
+        sc.setJobGroup(None, None)
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+
+    assert (m["n_docs"], m["n_spans"], m["n_empty_spans"]) == (0, 0, 0)
+    assert _spans_map(SnapshotSink(out).read(spark)) == want
+    assert len(jobs) <= 4, sorted(jobs)
 
 
 def test_time_travel_read(spark, tmp_path):

@@ -17,8 +17,10 @@ Local smoke:
       tools/run_extract.py --synthetic 2000 --output /tmp/docs_out
 
 The job is idempotent and resumable: every invocation processes only
-doc_ids absent from committed snapshots and commits a new snapshot with
-per-partition lineage (plans/resume.py).
+the documents extract() keeps whose doc_ids are absent from committed
+snapshots, and commits a new snapshot with per-partition lineage
+(plans/resume.py). An invocation with nothing pending commits an empty
+snapshot without running the extract plan.
 """
 
 from __future__ import annotations
