@@ -23,4 +23,6 @@ Subpackages:
   streaming/   structured-streaming variants (video track merge)
 """
 
+from . import _zipimport  # noqa: F401  (stat-checked zip directories, see module)
+
 __version__ = "0.1.0"
