@@ -8,6 +8,7 @@ Cluster usage (the 1000-executor shape):
       --num-executors 1000 --executor-cores 4 --executor-memory 16g \\
       --conf spark.sql.adaptive.enabled=true \\
       --conf spark.sql.shuffle.partitions=8000 \\
+      --conf spark.sql.codegen.cache.maxEntries=1000 \\
       --py-files davar_lab_ocr_spark.zip \\
       tools/run_extract.py --input <raw_documents path> --output <sink path>
 
