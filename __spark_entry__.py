@@ -11,6 +11,7 @@ golden-tested in tests/.
 
 from __future__ import annotations
 
+import os
 from collections.abc import Callable
 
 import pyspark.sql.functions as F
@@ -29,11 +30,35 @@ _PUNCT_SQL = PUNCT.replace("'", "''")
 _STOP_SQL = ", ".join(f"'{s}'" for s in STOPWORDS)
 
 
+# The table contract: the schema of every table ``_t`` reads, exactly as
+# Spark infers it from the sf* tables. Declaring it spares each read a
+# one-task schema-inference job. Trade-off: a column missing from a file
+# reads as null instead of failing at analysis, so
+# tests/test_table_reads.py pins each DDL to the inferred schema.
+TABLE_DDL = {
+    "region": "r_regionkey int, r_name string",
+    "nation": "n_nationkey int, n_name string, n_regionkey int",
+    "customer": "c_custkey bigint, c_name string, c_nationkey int, c_acctbal double, "
+    "c_mktsegment string",
+    "orders": "o_orderkey bigint, o_custkey bigint, o_orderstatus string, o_totalprice double, "
+    "o_orderdate timestamp_ntz, o_orderpriority string",
+    "lineitem": "l_orderkey bigint, l_partkey bigint, l_suppkey bigint, l_linenumber int, "
+    "l_quantity double, l_extendedprice double, l_discount double, l_tax double, "
+    "l_returnflag string, l_linestatus string, l_shipdate timestamp_ntz",
+    "documents": "doc_id bigint, text string, lang string, source string, n_chars bigint",
+    "events": "event_id bigint, ts timestamp_ntz, user_id bigint, event_type string, "
+    "value double, props string",
+    "embeddings": "vec_id bigint, embedding array<float>, label int",
+    "part": "p_partkey bigint, p_name string, p_brand string, p_type string, p_size int, "
+    "p_retailprice double",
+}
+
+
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    return spark.read.schema(TABLE_DDL[name]).parquet(f"{sf_dir}/{name}.parquet")
 
 
-FIXTURES = "/root/repo/tests/fixtures"
+FIXTURES = os.path.join(os.path.dirname(os.path.abspath(__file__)), "tests", "fixtures")
 
 
 def _explode_spans(docs: DataFrame) -> DataFrame:
@@ -639,7 +664,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # is derived from the generator dict WITHOUT touching lmdb
         # bytes, so a driver-green row proves the store roundtrip
         # preserves every image byte and label
-        import os
         import tempfile
 
         from davar_lab_ocr_spark.sources.datalist import rcg_lmdb_scan

@@ -47,8 +47,11 @@ def word_shingle_rows(df: DataFrame, n: int = 3, text_col: str = "text", id_col:
     formulation uses. Consumers that need per-doc DISTINCT shingles
     either call :func:`word_shingles` or dedupe inside their own
     shuffle (guide §2.4: share the exchange instead of adding one).
+
+    The text is split once per row into a column before the window
+    lambda, which would otherwise re-split it for every window.
     """
-    arr = F.split(F.col(text_col), " ")
+    arr = F.col("_words")
     windows = F.when(
         F.size(arr) >= n,
         F.transform(
@@ -60,7 +63,8 @@ def word_shingle_rows(df: DataFrame, n: int = 3, text_col: str = "text", id_col:
         ),
     ).otherwise(F.array().cast("array<string>"))
     return (
-        df.select(F.col(id_col), F.explode(windows).alias("shingle"))
+        df.select(F.col(id_col), F.split(F.col(text_col), " ").alias("_words"))
+        .select(F.col(id_col), F.explode(windows).alias("shingle"))
         .filter(F.col("shingle").isNotNull())
     )
 

@@ -99,14 +99,19 @@ def fingerprint(df: DataFrame, text_col: str = "text", id_col: str = "doc_id", k
     """Rolling-hash document fingerprint (winnowing-lite): the minimum
     md5 over all k-char shingles of the normalized text. Equal texts ->
     equal fingerprints; robust to token order only as far as shingles
-    overlap."""
-    norm = normalize_text(F.col(text_col))
+    overlap.
+
+    The normalized text is bound as a column before the shingle lambda:
+    an expression written inside a higher-order-function lambda is
+    evaluated once per element, which made every shingle re-normalize
+    the whole text (O(n^2) per document)."""
+    norm = F.col("_norm")
     n = F.length(norm)
     shingle_hashes = F.transform(
         F.sequence(F.lit(1), F.greatest(n - k + 1, F.lit(1))),
         lambda i: F.md5(norm.substr(i, F.lit(k))),
     )
-    return df.select(
+    return df.select(id_col, normalize_text(F.col(text_col)).alias("_norm")).select(
         id_col,
         F.array_min(shingle_hashes).alias("fp"),
     )

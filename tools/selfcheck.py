@@ -7,7 +7,6 @@ Usage: python tools/selfcheck.py [sf_dir] [query_name ...]
 
 from __future__ import annotations
 
-import hashlib
 import os
 import sys
 import time
@@ -15,29 +14,7 @@ import time
 # the checkout this script lives in, not whatever is installed
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-import duckdb  # noqa: E402
-import pandas as pd  # noqa: E402
-
-TABLES = [
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-]
-
-
-def value_hash(pdf: pd.DataFrame) -> str:
-    """Order-insensitive: sort columns by name, rows by all columns,
-    hash the canonical string rendering."""
-    cols = sorted(pdf.columns)
-    pdf = pdf[cols].copy()
-    for c in cols:
-        if pdf[c].dtype == object:
-            pdf[c] = pdf[c].astype(str)
-    pdf = pdf.sort_values(by=cols, kind="mergesort").reset_index(drop=True)
-    # plain to_csv, NO float_format: the driver's renderer does not mask
-    # dtype drift (e.g. DuckDB HUGEINT -> float64 '1.0' vs bigint '1'),
-    # so neither do we — that class of mismatch must surface locally.
-    payload = pdf.to_csv(index=False)
-    return hashlib.md5(payload.encode()).hexdigest()
+from tools.oracle_check import compare, oracle_connection  # noqa: E402
 
 
 def main():
@@ -49,11 +26,7 @@ def main():
 
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count())
     spark = get_spark("selfcheck", parallelism=cpus)
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
-        )
+    con = oracle_connection(sf_dir)
 
     qs = E.queries()
     oracles = E.oracle_sql()
@@ -76,23 +49,7 @@ def main():
         except Exception as ex:
             results[name] = f"ORACLE-ERROR {type(ex).__name__}: {str(ex)[:200]}"
             continue
-        problems = []
-        if len(sdf) != len(odf):
-            problems.append(f"rowcount {len(sdf)} vs {len(odf)}")
-        if sorted(sdf.columns) != sorted(odf.columns):
-            problems.append(f"cols {sorted(sdf.columns)} vs {sorted(odf.columns)}")
-        if not problems:
-            hs, ho = value_hash(sdf), value_hash(odf)
-            if hs != ho:
-                problems.append("value-hash mismatch")
-                # show first differing rows for debug
-                cols = sorted(sdf.columns)
-                a = sdf[cols].astype(str).sort_values(by=cols).reset_index(drop=True)
-                b = odf[cols].astype(str).sort_values(by=cols).reset_index(drop=True)
-                neq = (a != b).any(axis=1)
-                if neq.any():
-                    i = int(neq.idxmax())
-                    problems.append(f"first diff row {i}: spark={a.iloc[i].to_dict()} oracle={b.iloc[i].to_dict()}")
+        problems = compare(sdf, odf)
         results[name] = (
             f"MATCH rows={len(sdf)} ({t1-t0:.1f}s)" if not problems else "MISMATCH: " + "; ".join(problems)
         )
