@@ -1,13 +1,17 @@
-"""JVM-side (whole-stage-codegen) CTC / attention decode.
+"""JVM-side CTC / attention decode.
 
 The reference decodes with per-batch python/C kernels
 (ctc_converter.py:166-179, att_head.py:238-258); on Spark the same
 semantics are expressible as higher-order array functions — filter /
-transform / array_join over the id array — which keeps the entire text
-hot path inside Tungsten codegen (no python workers, no Arrow
-round-trip). Measured ~3x faster and near-linear scaling vs the
-equivalent pandas-UDF stage; the UDF variant remains in decode.py for
-kernels that genuinely need numpy.
+transform / array_join over the id array — which keeps the text hot
+path on the JVM (no python workers, no Arrow round-trip). The
+higher-order functions (`zip_with`, `transform`, `filter`,
+`aggregate`) are `CodegenFallback` expressions: the surrounding stage
+is generated code, but each lambda is interpreted per element (SCALE.md
+"UDF discipline"). Measured ~3x faster and near-linear scaling vs the
+equivalent pandas-UDF stage; the python/numpy decoders in
+functions/text.py remain as the oracles the JVM path is tested
+against.
 
 Charset conventions match functions/text.py:
 - CTC: blank id 0, chars '0'-'9''a'-'z' at ids 1..36; keep step i iff

@@ -1,7 +1,8 @@
 """Text-analysis operators for large-scale corpus pipelines.
 
-All pure pyspark.sql expressions (JVM-side, codegen'd): tokenization,
-token counting, quality scoring, stopword-based language scoring,
+All pure pyspark.sql expressions (JVM-side; higher-order-function
+lambdas are interpreted, not generated code): tokenization, token
+counting, quality scoring, stopword-based language scoring,
 rolling-hash document fingerprinting. These extend the reference's
 text-normalization/filter semantics (davar_loading.py:226-240,
 davar_rcg_dataset.py:550-552) to the corpus-analytics operations a

@@ -20,8 +20,9 @@ single_gpu_test -> post_processing -> evaluate):
                             JVM exprs (array_position/array_max), the
                             VSR-decode analog (vsr.py:420-437)
   5. decode               — CTC / attention decode as JVM higher-order
-                            array exprs (decode_sql.py, stays in
-                            whole-stage codegen); table regions take
+                            array exprs (decode_sql.py; the lambdas
+                            are interpreted per element inside the
+                            generated stage); table regions take
                             element pos of the stage-2 html array
   6. re-assembly          — groupBy(doc_id).collect_list(span): ONE
                             shuffle. Skew analysis: for a collect_list
@@ -75,10 +76,11 @@ def extract(raw: DataFrame) -> DataFrame:
     """Run the full extraction pipeline.
 
     Text/media regions decode entirely JVM-side (higher-order array
-    exprs, operators/decode_sql.py) — the hot path never leaves
-    whole-stage codegen. Only the cell arrays (tables are rare and
-    genuinely numpy: clique solving + html assembly) route through the
-    Arrow batch UDF, one row per document.
+    exprs, operators/decode_sql.py) — the hot path never leaves the
+    JVM, though the decode lambdas are interpreted, not generated code.
+    Only the cell arrays (tables are rare and genuinely numpy: clique
+    solving + html assembly) route through the Arrow batch UDF, one row
+    per document.
     """
     from ..operators.decode_sql import text_decode_col
     from ..operators.table import doc_table_html_udf

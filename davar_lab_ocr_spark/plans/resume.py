@@ -16,19 +16,21 @@ commit protocol on plain parquet:
 
 A batch is visible iff its manifest exists — a crash mid-write leaves
 orphan files that readers never see (snapshot isolation, the
-df.write.format('iceberg') analog).
+df.write.format('iceberg') analog). A batch of no documents is a
+manifest only: counters 0, ``data_path`` and ``lineage_path`` null, and
+readers skip it.
 
 Pending = the documents extract() keeps (``keep_documents``) left-anti
 joined against all committed batches' doc_ids. A document extract()
 drops never lands in a snapshot, so it must not count as pending. That
 test reads only the keys and ``regions.care``; when nothing is pending
-the increment commits an empty batch without starting the extract plan
-(no regions scan, no Python task).
+the increment commits the manifest alone: extract() is not even built,
+and no Spark job runs after the pending check.
 
 Spark jobs per increment: the pending check, the extract stages, the
-data write (manifest totals are observed on it) and the lineage write.
-Committed keys are read with an explicit schema, so no schema-merge job
-runs.
+data write (manifest totals are observed on it) and the lineage, which
+is counted from the data files just written, per write task. Committed
+keys are read with an explicit schema, so no schema-merge job runs.
 """
 
 from __future__ import annotations
@@ -71,7 +73,11 @@ class SnapshotSink:
             # backwards) would otherwise leak later batches into the
             # historical read
             manifests = manifests[: ids.index(as_of) + 1]
-        return [os.path.join(self.path, f"batch={m['batch_id']}") for m in manifests]
+        # a zero-doc batch holds no rows (and has no data directory when
+        # written by write_empty), so no reader lists it
+        return [
+            os.path.join(self.path, f"batch={m['batch_id']}") for m in manifests if m["n_docs"]
+        ]
 
     def history(self) -> list[dict]:
         """The commit log, oldest first (the Iceberg snapshots-table
@@ -128,43 +134,56 @@ class SnapshotSink:
             )
         ).alias("n_empty_spans")
         # the manifest totals are observed on the data write itself, so
-        # no separate totals job runs. persist() stays: the lineage
-        # groupBy reads the same rows and would otherwise recompute them.
+        # no separate totals job runs
         observed = Observation()
-        staged = docs.withColumn("_part", F.spark_partition_id()).persist()
-        try:
-            staged.drop("_part").observe(
-                observed,
-                F.count(F.lit(1)).alias("n_docs"),
-                F.sum(F.size("spans")).alias("n_spans"),
-                n_empty,
-            ).write.mode("overwrite").parquet(data_path)
-            lineage = staged.groupBy("_part").agg(
-                F.count("*").alias("n_docs"),
-                F.sum(F.size("spans")).alias("n_spans"),
-                n_empty,
-                F.min("doc_id").alias("min_doc_id"),
-                F.max("doc_id").alias("max_doc_id"),
-            )
-            lineage.write.mode("overwrite").parquet(lineage_path)
-        finally:
-            staged.unpersist()
+        docs.observe(
+            observed,
+            F.count(F.lit(1)).alias("n_docs"),
+            F.sum(F.size("spans")).alias("n_spans"),
+            n_empty,
+        ).write.mode("overwrite").parquet(data_path)
         totals = observed.get
+        # lineage is counted from the committed files, not from the rows
+        # on their way there, so nothing is persisted. A data file's part
+        # number is the partition id of the task that wrote it.
+        written = docs.sparkSession.read.schema(docs.schema).parquet(data_path)
+        part = F.regexp_extract("_metadata.file_name", r"^part-(\d+)", 1).cast("int")
+        lineage = written.groupBy(part.alias("_part")).agg(
+            F.count("*").alias("n_docs"),
+            F.sum(F.size("spans")).alias("n_spans"),
+            n_empty,
+            F.min("doc_id").alias("min_doc_id"),
+            F.max("doc_id").alias("max_doc_id"),
+        )
+        lineage.write.mode("overwrite").parquet(lineage_path)
+        return self._commit(
+            batch_id,
+            n_docs=totals["n_docs"],
+            n_spans=int(totals["n_spans"] or 0),
+            n_empty_spans=int(totals["n_empty_spans"] or 0),
+            data_path=data_path,
+            lineage_path=lineage_path,
+        )
 
+    def write_empty(self, batch_id: str | None = None) -> dict:
+        """Commit a batch of no documents: the manifest alone, with
+        counters 0 and no data or lineage directory. No Spark job runs."""
+        return self._commit(
+            batch_id or uuid.uuid4().hex[:12],
+            n_docs=0,
+            n_spans=0,
+            n_empty_spans=0,
+            data_path=None,
+            lineage_path=None,
+        )
+
+    def _commit(self, batch_id: str, **fields) -> dict:
+        """Write the manifest, the commit point. Returns it."""
         # monotonic commit sequence (single-writer protocol, like
         # Iceberg's snapshot sequence-number): next = max committed + 1
         prior = self.committed_batches()
         seq = max((m.get("seq", -1) for m in prior), default=-1) + 1
-        manifest = {
-            "batch_id": batch_id,
-            "seq": seq,
-            "committed_at": time.time(),
-            "n_docs": totals["n_docs"],
-            "n_spans": int(totals["n_spans"] or 0),
-            "n_empty_spans": int(totals["n_empty_spans"] or 0),
-            "data_path": data_path,
-            "lineage_path": lineage_path,
-        }
+        manifest = {"batch_id": batch_id, "seq": seq, "committed_at": time.time(), **fields}
         os.makedirs(self.manifest_dir, exist_ok=True)
         tmp = os.path.join(self.manifest_dir, f".{batch_id}.tmp")
         with open(tmp, "w") as fh:
@@ -196,10 +215,7 @@ def run_resumable_extract(
     uncommitted partial output is invisible and re-done."""
     sink = SnapshotSink(out_path)
     todo = pending_documents(spark, raw, sink)
-    docs = extract(todo)
-    # nothing pending: commit the empty batch without starting the
-    # extract plan. limit(0) optimizes to an empty LocalRelation, so no
-    # regions scan and no Python task runs.
+    # nothing pending: commit a manifest only, without building extract()
     if todo.select("doc_id").isEmpty():
-        docs = docs.limit(0)
-    return sink.write_batch(docs, batch_id)
+        return sink.write_empty(batch_id)
+    return sink.write_batch(extract(todo), batch_id)

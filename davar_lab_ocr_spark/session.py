@@ -8,6 +8,12 @@ enough for the whole query suite: Spark's default LRU of 100 classes is
 smaller than one pass over the headline queries, so every rerun would
 recompile (Janino, then the JIT) every class. That cache size is a
 static conf, read only when the session starts.
+
+DataFrame debugging is off: with it on, every PySpark Column function
+call captures its Python call site and sends it to the JVM (about half
+of the py4j round trips of building extract()). An error raised by a
+DataFrame-API expression then names the expression and the SQL text,
+but not the Python file:line that built it.
 """
 
 from __future__ import annotations
@@ -69,6 +75,7 @@ def get_spark(
         .config("spark.sql.execution.arrow.maxBytesPerBatch", _ARROW_BATCH_BYTES)
         .config("spark.sql.optimizer.nestedSchemaPruning.enabled", "true")
         .config("spark.sql.codegen.cache.maxEntries", _CODEGEN_CACHE_ENTRIES)
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")

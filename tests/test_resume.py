@@ -75,19 +75,46 @@ def test_rerun_is_idempotent(spark, tmp_path):
     assert sink.read(spark).count() == 20
 
 
-def test_lineage_counters(spark, tmp_path):
+def test_lineage_counters(spark, tmp_path, monkeypatch):
     """Manifest totals (observed on the data write) equal the lineage
     sums and the committed spans, over a three-partition batch whose
-    input also holds documents extract() drops."""
+    input also holds documents extract() drops. Lineage is counted from
+    the committed files, one row per data file's part number, without
+    persisting the batch."""
+    from pyspark.sql.classic.dataframe import DataFrame
+
     out = str(tmp_path / "sink3")
     raw, want = _corpus_with_dropped_docs(spark, str(tmp_path / "raw"), 30, seed=23)
     docs = extract(raw)
     assert _spans_map(docs) == want
+
+    def refuse(*_args, **_kwargs):
+        raise AssertionError("write_batch must not persist its output")
+
+    monkeypatch.setattr(DataFrame, "persist", refuse)
+    monkeypatch.setattr(DataFrame, "cache", refuse)
     manifest = SnapshotSink(out).write_batch(docs.repartition(3), batch_id="x")
+    monkeypatch.undo()
+
     rows = spark.read.parquet(manifest["lineage_path"]).collect()
     assert len(rows) == 3
     for key in ("n_docs", "n_spans", "n_empty_spans"):
         assert sum(r[key] for r in rows) == manifest[key], key
+    # each lineage row describes exactly the committed rows of its file
+    files = sorted(n for n in os.listdir(manifest["data_path"]) if n.startswith("part-"))
+    by_part = {int(n.split("-")[1]): n for n in files}
+    assert sorted(by_part) == sorted(r["_part"] for r in rows)
+    for r in rows:
+        got = spark.read.parquet(os.path.join(manifest["data_path"], by_part[r["_part"]])).collect()
+        spans = [s for d in got for s in d["spans"]]
+        assert r["n_docs"] == len(got)
+        assert r["n_spans"] == len(spans)
+        assert r["n_empty_spans"] == sum(1 for s in spans if not s["text"] and not s["media_ref"])
+        assert (r["min_doc_id"], r["max_doc_id"]) == (
+            min(d["doc_id"] for d in got),
+            max(d["doc_id"] for d in got),
+        )
+
     committed = SnapshotSink(out).read(spark)
     assert manifest["n_docs"] == len(want)
     assert manifest["n_spans"] == committed.select(F.sum(F.size("spans"))).first()[0]
@@ -102,8 +129,8 @@ def test_lineage_counters(spark, tmp_path):
 
 def test_rerun_skips_dropped_documents(spark, tmp_path):
     """A document extract() drops never lands in a snapshot, yet is not
-    pending: a rerun over the committed input commits an all-zero batch
-    without running the extract plan."""
+    pending: a rerun over the committed input commits an all-zero
+    manifest, and no job runs after the pending check."""
     out = str(tmp_path / "sink5")
     raw, want = _corpus_with_dropped_docs(spark, str(tmp_path / "raw"), 30, seed=24)
     run_resumable_extract(spark, raw, out, batch_id="a")
@@ -119,7 +146,42 @@ def test_rerun_skips_dropped_documents(spark, tmp_path):
 
     assert (m["n_docs"], m["n_spans"], m["n_empty_spans"]) == (0, 0, 0)
     assert _spans_map(SnapshotSink(out).read(spark)) == want
-    assert len(jobs) <= 4, sorted(jobs)
+    assert len(jobs) <= 2, sorted(jobs)
+    assert not os.path.exists(os.path.join(out, "_lineage", "batch=b"))
+    assert not os.path.exists(os.path.join(out, "batch=b"))
+
+
+def test_zero_doc_batch_in_log(spark, tmp_path):
+    """A batch of no documents is a manifest only: every key, counters 0,
+    no data or lineage directory. Readers, time travel and later
+    increments see the log as if it held rows."""
+    out = str(tmp_path / "zero")
+    raw_rows, expected_rows = make_raw_corpus(30, seed=25, giant_every=0)
+    full = raw_df(spark, raw_rows)
+    cut = "doc-25-0000015"
+    half = full.filter(F.col("doc_id") < cut)
+    want = _spans_map(expected_df(spark, expected_rows))
+    want_half = {k: v for k, v in want.items() if k < cut}
+
+    m1 = run_resumable_extract(spark, half, out, batch_id="b1")
+    m0 = run_resumable_extract(spark, half, out, batch_id="b0")
+    assert set(m0) == set(m1)
+    assert (m0["n_docs"], m0["n_spans"], m0["n_empty_spans"]) == (0, 0, 0)
+    assert m0["data_path"] is None and m0["lineage_path"] is None
+    assert not os.path.exists(os.path.join(out, "batch=b0"))
+    assert not os.path.exists(os.path.join(out, "_lineage", "batch=b0"))
+
+    sink = SnapshotSink(out)
+    assert [m["batch_id"] for m in sink.history()] == ["b1", "b0"]
+    assert _spans_map(sink.read(spark)) == want_half
+    assert _spans_map(sink.read(spark, as_of="b0")) == want_half
+    assert sorted(r["doc_id"] for r in sink.processed_doc_ids(spark).collect()) == sorted(want_half)
+
+    m2 = run_resumable_extract(spark, full, out, batch_id="b2")
+    assert m2["n_docs"] == len(want) - len(want_half)
+    assert [m["batch_id"] for m in sink.history()] == ["b1", "b0", "b2"]
+    assert _spans_map(sink.read(spark)) == want
+    assert _spans_map(sink.read(spark, as_of="b0")) == want_half
 
 
 def test_time_travel_read(spark, tmp_path):

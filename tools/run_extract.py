@@ -9,6 +9,7 @@ Cluster usage (the 1000-executor shape):
       --conf spark.sql.adaptive.enabled=true \\
       --conf spark.sql.shuffle.partitions=8000 \\
       --conf spark.sql.codegen.cache.maxEntries=1000 \\
+      --conf spark.python.sql.dataFrameDebugging.enabled=false \\
       --py-files davar_lab_ocr_spark.zip \\
       tools/run_extract.py --input <raw_documents path> --output <sink path>
 
@@ -20,8 +21,8 @@ Local smoke:
 The job is idempotent and resumable: every invocation processes only
 the documents extract() keeps whose doc_ids are absent from committed
 snapshots, and commits a new snapshot with per-partition lineage
-(plans/resume.py). An invocation with nothing pending commits an empty
-snapshot without running the extract plan.
+(plans/resume.py). An invocation with nothing pending commits a
+manifest only, without building the extract plan.
 """
 
 from __future__ import annotations
